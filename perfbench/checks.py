@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import sys
 
 from engagement_data_pipeline_spark.tables import TABLE_NAMES
 
@@ -31,18 +32,27 @@ def _signature(df, tag: int):
                      F.sum(lo).alias("lo"), F.sum(hi).alias("hi"))
 
 
-def frames_equal(pairs) -> bool:
+def frames_equal(pairs, names=None) -> bool:
     """Each (a, b) pair has the same column set and the same rows,
-    duplicates included. All signatures are computed in one job."""
+    duplicates included. All signatures are computed in one job. With
+    `names`, each pair that differs is named on standard error."""
+    names = names or [str(i) for i in range(len(pairs))]
+    bad = [n for n, (a, b) in zip(names, pairs)
+           if sorted(a.columns) != sorted(b.columns)]
     sigs = None
     for i, (a, b) in enumerate(pairs):
-        if sorted(a.columns) != sorted(b.columns):
-            return False
+        if names[i] in bad:
+            continue
         for j, df in enumerate((a, b)):
             s = _signature(df, 2 * i + j)
             sigs = s if sigs is None else sigs.unionByName(s)
-    got = {r.tag: (r.n, r.lo, r.hi) for r in sigs.collect()}
-    return all(got[2 * i] == got[2 * i + 1] for i in range(len(pairs)))
+    got = ({r.tag: (r.n, r.lo, r.hi) for r in sigs.collect()}
+           if sigs is not None else {})
+    bad += [names[i] for i in range(len(pairs))
+            if names[i] not in bad and got[2 * i] != got[2 * i + 1]]
+    for n in bad:
+        print(f"perfbench: {n} differs from its recompute", file=sys.stderr)
+    return not bad
 
 
 def _canon(v) -> str:

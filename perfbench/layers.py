@@ -8,7 +8,6 @@ set-up. Layers a workload does not exercise read 0.
 
 from __future__ import annotations
 
-import statistics
 from collections import defaultdict
 
 from . import eventlog
@@ -75,9 +74,7 @@ def per_layer(ctx, log_dir: str, app_id: str):
         "ratio")
     put("ingest.occ_conflicts",
         sum(1 for s in named("ingest.claim") if s.get("lost")) / n, "count")
-    wa = ctx.notes.get("write_amp")
-    put("ingest.write_amp", statistics.median(wa) if wa else 0.0,
-        "bytes/byte")
+    put("ingest.write_amp", ctx.write_amp or 0.0, "bytes/byte")
 
     # streaming.transform, labels.views
     put("transform.refresh_s", tot("transform.refresh") / n, "s")

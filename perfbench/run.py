@@ -128,7 +128,8 @@ class Ctx:
         self.failed = 0
         self.setup_s: float | None = None
         self.setup_extra_s = 0.0
-        self.notes: dict[str, list[float]] = {}
+        #: bytes/byte of the daily_delta day (see workloads.daily_delta)
+        self.write_amp: float | None = None
 
     # -- environment -------------------------------------------------
     def path(self, name: str) -> str:
@@ -197,7 +198,8 @@ class Ctx:
         if ok:
             self.rss.active = False
             try:
-                ok = bool(check())
+                with tr.span("check", label=label):
+                    ok = bool(check())
             except Exception:
                 traceback.print_exc()
                 ok = False
@@ -216,9 +218,6 @@ class Ctx:
     def done(self) -> bool:
         """The timed operations add up to the run's measuring time."""
         return sum(self.op_times) >= self.seconds
-
-    def note(self, key: str, value: float) -> None:
-        self.notes.setdefault(key, []).append(value)
 
 
 def _stop_spark(ctx: Ctx) -> None:
@@ -268,9 +267,8 @@ def summary_line(ctx: Ctx) -> str:
                  f"(n={len(ctx.op_times)})",
                  f"query_p90_s={q[8]:.4f} s",
                  f"suite_s={ctx.op_s * len(set(ctx.op_labels)):.4f} s"]
-    if "write_amp" in ctx.notes:
-        parts.append(f"write_amp={_median(ctx.notes['write_amp']):.2f} "
-                     "bytes/byte")
+    if ctx.write_amp is not None:
+        parts.append(f"write_amp={ctx.write_amp:.2f} bytes/byte")
     parts.append(f"peak_rss_mb={ctx.rss.peak / 2**20:.1f} MB")
     parts.append(f"setup_s={ctx.setup_s + ctx.setup_extra_s:.3f} s")
     parts.append(f"error_rate={ctx.failed / max(1, ctx.attempted):.4f} ratio")

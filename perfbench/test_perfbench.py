@@ -100,6 +100,42 @@ def test_oracle_check_counts_a_corrupted_query_result(env):
     assert not checks.matches(df.limit(df.count() - 1), expected)
 
 
+def test_incremental_check_names_an_index_left_stale(env, tmp_path, capsys):
+    """A day run that skips the serving-index sinks leaves every other
+    artifact right; the check fails and names exactly the two indexes."""
+    from pyspark.sql import functions as F
+
+    from engagement_data_pipeline_spark.analysis.runner import (
+        run_incremental_pipeline)
+    from engagement_data_pipeline_spark.queries import engagement
+    from engagement_data_pipeline_spark.queries.e2e_q import (
+        _RAW_COLS, _pipeline_stages)
+    from engagement_data_pipeline_spark.streaming.ingest import (
+        foreach_batch_upsert)
+    from perfbench.workloads import check_incremental
+
+    spark, base = env.spark, str(tmp_path / "pipeline")
+    res = (engagement._resolved(spark, env.sf).select(*_RAW_COLS)
+           .localCheckpoint())
+    late = F.col("message_id").endswith("7")
+    merge = foreach_batch_upsert(f"{base}/raw", ["message_id"], n_buckets=2,
+                                 bucket_cols=["participant_uuid"],
+                                 txn_app_id="src", mode="latest_wins")
+    merge(res.where(~late), 1)
+    run_incremental_pipeline(spark, f"{base}/runs", "run1", _pipeline_stages(
+        spark, base, n_buckets_data=2, n_buckets_view=2))
+    assert check_incremental(spark, base)
+    merge(res.where(late), 2)
+    run_incremental_pipeline(spark, f"{base}/runs", "run2", _pipeline_stages(
+        spark, base, n_buckets_data=2, n_buckets_view=2, with_indexes=False))
+    capsys.readouterr()
+    assert not check_incremental(spark, base)
+    named = sorted(line.split()[1] for line in
+                   capsys.readouterr().err.splitlines()
+                   if line.endswith("differs from its recompute"))
+    assert named == ["ann_cells", "text_index"]
+
+
 def test_self_times_add_up_to_the_operation():
     spans = [
         {"id": 0, "parent": None, "start": 0.0, "end": 10.0},

@@ -466,9 +466,16 @@ def refresh_views(spark, table_path: str, pview_path: str,
     window — the shared slice is only ever used where it is exactly
     both views' window, enforced again inside `_resolve_slice`.
 
+    The two folds run concurrently (`session.run_branches`): they
+    read the shared slice and write separate tables under separate
+    watermarks, so a crash during one leaves the other applied or
+    pending, and the next refresh takes the diverged-watermark path
+    above.
+
     Returns {"participants": commit|None, "messages": commit|None}
     (None = that view was already current)."""
     from ..operators.topk import touched_group_slice
+    from ..session import run_branches
     from ..streaming.ingest import read_table_manifest
 
     src_man = read_table_manifest(spark, table_path)
@@ -494,11 +501,9 @@ def refresh_views(spark, table_path: str, pview_path: str,
                                             applied_p,
                                             ["participant_uuid"])
         shared = (live, touched, applied_p, current)
-    return {
-        "participants": refresh_participants_view(
-            spark, table_path, pview_path, config,
-            shared_slice=shared),
-        "messages": refresh_messages_view(
-            spark, table_path, mview_path, config,
-            shared_slice=shared),
-    }
+    p_commit, m_commit = run_branches(spark, [
+        lambda: refresh_participants_view(spark, table_path, pview_path,
+                                          config, shared_slice=shared),
+        lambda: refresh_messages_view(spark, table_path, mview_path,
+                                      config, shared_slice=shared)])
+    return {"participants": p_commit, "messages": m_commit}

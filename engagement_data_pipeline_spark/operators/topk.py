@@ -156,7 +156,7 @@ def touched_group_slice(spark, table_path: str, from_commit: int,
     commits past `from_commit`."""
     from pyspark.sql import functions as F
 
-    from ..streaming.cdf_source import MergeTableChangesDataSource
+    from ..streaming.cdf_source import ensure_change_feed_registered
     from ..streaming.ingest import read_table_manifest
 
     gcols = list(group_cols)
@@ -219,7 +219,7 @@ def touched_group_slice(spark, table_path: str, from_commit: int,
     # pre-change snapshot read, no semi-join. Origin columns have no
     # __old twin (keys are immutable), so a group column that is also
     # a key reads as itself on the old side.
-    spark.dataSource.register(MergeTableChangesDataSource)
+    ensure_change_feed_registered(spark)
     # `ship` narrows the Python→JVM boundary to op + group columns
     # (+ their __old twins): the diff still compares every payload
     # column (emission semantics unchanged — a row changing only in

@@ -76,6 +76,7 @@ from ..labels.views import (
 )
 from ..labels.ws_correction import WS_SCHEME_ID, apply_ws_correction
 from ..sinks.exports import analysis_matrix, analysis_matrix_headers
+from ..session import run_branches
 from ..streaming import mv as MV
 from ..streaming.drain import drain_changes_direct, fan_out
 from ..streaming.ingest import (
@@ -463,7 +464,17 @@ def _pipeline_stages(spark: SparkSession, base: str,
     story sizes buckets with the corpus (constant bucket bytes);
     `with_indexes=False` drops the two serving-index sinks from the
     analysis fan_out (the r13-shaped pipeline, for A/B
-    measurement)."""
+    measurement).
+
+    The stages run one after another, but inside a stage independent
+    branches run concurrently (`session.run_branches`): views folds
+    both views at once (`refresh_views`), analysis drains the two view
+    feeds at once and each drain applies its fanned-out sinks at once
+    (`fan_out`), and exports refreshes K3 and K2 at once. Every branch
+    writes its own table under its own txn watermark, so a crash
+    mid-stage leaves each branch's artifact either applied or
+    pending, and the runner's re-run of that stage applies exactly
+    the pending ones."""
     raw = os.path.join(base, "raw")
     imputed = os.path.join(base, "imputed")
     pview = os.path.join(base, "pview")
@@ -516,14 +527,20 @@ def _pipeline_stages(spark: SparkSession, base: str,
                 id_col="doc_id", emb_col="embedding")
             mv_sinks.append(lambda b, i: text(_index_feed(b), i))
             mv_sinks.append(lambda b, i: ann(_index_feed(b), i))
-        drain_changes_direct(spark, mview, fan_out(*mv_sinks),
-                             state_path=os.path.join(base,
-                                                     "drain_mview"))
-        return drain_changes_direct(spark, pview, fan_out(*[
+        pv_sinks = [
             MV.mv_stream_sink(os.path.join(base, sub), gcols, metrics,
                               prepare=prep, source_cols=cols)
-            for sub, gcols, metrics, prep, cols in _PV_SINKS]),
-            state_path=os.path.join(base, "drain_pview"))
+            for sub, gcols, metrics, prep, cols in _PV_SINKS]
+        # the two drains read different feeds into disjoint states
+        # under their own drain state files: run them concurrently
+        _m_head, p_head = run_branches(spark, [
+            lambda: drain_changes_direct(
+                spark, mview, fan_out(*mv_sinks),
+                state_path=os.path.join(base, "drain_mview")),
+            lambda: drain_changes_direct(
+                spark, pview, fan_out(*pv_sinks),
+                state_path=os.path.join(base, "drain_pview"))])
+        return p_head
 
     def _stage_exports() -> int | None:
         k2 = os.path.join(base, "k2")
@@ -537,8 +554,10 @@ def _pipeline_stages(spark: SparkSession, base: str,
                                   ["participant_uuid"],
                                   n_buckets=n_buckets_view)
             return int(read_table_manifest(spark, mview)["commit"])
-        refresh_transform_table(spark, pview, k3, _k3_tf)
-        return refresh_transform_table(spark, mview, k2, _k2_tf)
+        _k3_head, k2_head = run_branches(spark, [
+            lambda: refresh_transform_table(spark, pview, k3, _k3_tf),
+            lambda: refresh_transform_table(spark, mview, k2, _k2_tf)])
+        return k2_head
 
     return [("imputed", _stage_imputed), ("views", _stage_views),
             ("analysis", _stage_analysis), ("exports", _stage_exports)]

@@ -454,7 +454,7 @@ EMB_GRAM_SQL = f"""
 WITH q AS (
   SELECT list_transform(embedding,
            x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qx
-  FROM embeddings
+  FROM embeddings WHERE embedding IS NOT NULL  -- gram_stats skips them
 ),
 cnt AS (
   SELECT CAST(-1 AS INTEGER) AS i, CAST(-1 AS INTEGER) AS j,

@@ -695,13 +695,13 @@ def table_changes_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch planning) or a driver collect: the string projection
     runs JVM-side on the reader's output. Micro-batch delivery of this
     same format is certified by `table_changes_stream`."""
-    from ..streaming.cdf_source import (MergeTableChangesDataSource,
-                                        _latest_commit)
+    from ..streaming.cdf_source import (_latest_commit,
+                                        ensure_change_feed_registered)
 
     apply_runtime_conf(spark)
     table = _nested_cdf_fixture(spark, sf_dir)
     head = _latest_commit(table)
-    spark.dataSource.register(MergeTableChangesDataSource)
+    ensure_change_feed_registered(spark)
     ch = (spark.read.format("merge_table_changes")
           .option("path", table)
           .option("fromCommit", "1")

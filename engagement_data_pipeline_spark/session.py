@@ -9,8 +9,13 @@ session ourselves.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 # Conf applied to sessions we build AND (where runtime-settable) to
 # sessions handed to us by a host harness.
@@ -150,3 +155,55 @@ def get_spark(app_name: str = "engagement-data-pipeline-spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_branches(spark: SparkSession,
+                 thunks: Sequence[Callable[[], _T]]) -> list[_T]:
+    """Run independent zero-argument callables concurrently and return
+    their results in submission order.
+
+    The day run's maintenance is a chain of tiny Spark jobs: the
+    driver spends most of each one waiting on the JVM while most task
+    slots sit idle. Branches that write disjoint state (separate
+    tables, each under its own txn watermark) can overlap that
+    latency instead of queuing it. The pool is
+    min(len(thunks), defaultParallelism) wide; more branches than task
+    slots would only queue tasks. A single thunk runs inline.
+
+    Each thunk is wrapped in its own `inheritable_thread_target`, so
+    every branch starts from a private copy of the caller's local
+    properties (job group, description, scheduler pool) and session
+    tags: a branch that sets its own job group changes neither the
+    caller's nor a sibling's.
+
+    Every branch runs to completion before this returns or raises, so
+    a failure never leaves a sibling running against state the caller
+    releases next (fan_out's persisted batch). The first failure in
+    submission order is re-raised; later ones are named in a note on
+    it."""
+    from pyspark.util import inheritable_thread_target
+
+    thunks = list(thunks)
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    width = min(len(thunks), spark.sparkContext.defaultParallelism)
+    wrapped = []
+    for t in thunks:
+        # one call per thunk: the wrapper clones the caller's local
+        # properties ONCE and installs that object in the branch
+        # thread, so wrappers from one call would share (and mutate)
+        # a single Properties object
+        inherit = inheritable_thread_target(spark)
+        # with pinned-thread mode off there is nothing thread-local to
+        # carry over, and the call returns the session itself
+        wrapped.append(inherit(t) if callable(inherit) else t)
+    with ThreadPoolExecutor(max_workers=width,
+                            thread_name_prefix="branch") as pool:
+        futures = [pool.submit(w) for w in wrapped]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        first = errors[0]
+        for later in errors[1:]:
+            first.add_note(f"a sibling branch also failed: {later!r}")
+        raise first
+    return [f.result() for f in futures]

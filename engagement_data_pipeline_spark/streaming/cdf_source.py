@@ -2,7 +2,7 @@
 the Delta CDF `readChangeFeed` analog, built on PySpark 4's Python
 Data Source API:
 
-    spark.dataSource.register(MergeTableChangesDataSource)
+    ensure_change_feed_registered(spark)
     (spark.readStream.format("merge_table_changes")
           .option("path", table_path).load())
 
@@ -64,6 +64,8 @@ from __future__ import annotations
 
 import json
 import posixpath
+import threading
+import weakref
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
@@ -1277,3 +1279,22 @@ class MergeTableChangesDataSource(DataSource):
         return _ChangesBatchReader(
             path, int(self.options.get("fromCommit", 0)), int(to),
             cols, pa_schema, pa_types)
+
+
+#: Sessions `format("merge_table_changes")` is registered on. Weak, so
+#: a stopped session's entry goes with it; a new session registers anew.
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
+_REGISTER_LOCK = threading.Lock()
+
+
+def ensure_change_feed_registered(spark) -> None:
+    """Register `format("merge_table_changes")` on `spark`, once per
+    session. Every change-feed reader in the engine calls this instead
+    of `spark.dataSource.register`: concurrent drains (`fan_out` sinks,
+    the analysis stage's two view drains) would otherwise race a
+    re-registration of the source another branch is reading, and each
+    re-registration re-pickles the class."""
+    with _REGISTER_LOCK:
+        if spark not in _REGISTERED:
+            spark.dataSource.register(MergeTableChangesDataSource)
+            _REGISTERED.add(spark)

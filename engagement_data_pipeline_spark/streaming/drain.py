@@ -34,13 +34,15 @@ the table's own commit log.
 from __future__ import annotations
 
 import ast
+import functools
 import tempfile
 import time
 from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .cdf_source import MergeTableChangesDataSource, _latest_commit
+from ..session import run_branches
+from .cdf_source import _latest_commit, ensure_change_feed_registered
 
 
 def _committed_commit(query) -> int | None:
@@ -88,28 +90,38 @@ def fan_out(*sinks: Callable) -> Callable:
     plan, so without the persist every sink would re-run the
     Python-source scan + Arrow diff.
 
-    Exactly-once survives a crash BETWEEN sinks: each sink keeps its
+    Exactly-once survives a crash between sinks: each sink keeps its
     own txn watermark (MV: stream-batch id, index: batch id), so when
-    the stream dies after sink i applied batch B and the checkpoint
-    has no commit for B, the replayed batch is byte-identical
-    (immutable version dirs) — sinks ≤ i no-op on their watermark,
-    sinks > i apply. Order sinks stably across restarts; adding a
-    sink mid-stream is fine (it bootstraps from its first batch only
-    if its artifact is empty — point new sinks at a fresh drain from
+    the stream dies after some sinks applied batch B and the
+    checkpoint has no commit for B, the replayed batch is
+    byte-identical (immutable version dirs) — the sinks that applied
+    it no-op on their watermark, the rest apply. Adding a sink
+    mid-stream is fine (it bootstraps from its first batch only if
+    its artifact is empty — point new sinks at a fresh drain from
     startingCommit=0 instead).
 
-    Readers note: sinks apply SEQUENTIALLY within a batch, so two
-    fanned-out states answering one question can briefly disagree
-    mid-fold (state A at batch B, state B at B-1) — the same torn
-    window as N independent sinks on one stream. For paired MV states
-    use `mv.read_mv_pair_consistent`, which returns only when both
-    `__mv_stream` watermarks agree."""
+    Sinks apply CONCURRENTLY within a batch (`session.run_branches`,
+    at most defaultParallelism at once): each writes its own artifact
+    under its own watermark, so they share nothing but the persisted
+    batch, and a day run's sinks overlap their job latency instead of
+    queuing it. The batch is unpersisted only after EVERY sink has
+    returned; a failing sink's error is re-raised after its siblings
+    finish, so a crash mid-batch leaves some sinks at B and others at
+    B-1 — exactly the crash-between-sinks state the watermarks
+    already make safe to replay.
+
+    Readers note: two fanned-out states answering one question can
+    briefly disagree mid-fold (state A at batch B, state B at B-1) —
+    the same torn window as N independent sinks on one stream. For
+    paired MV states use `mv.read_mv_pair_consistent`, which returns
+    only when both `__mv_stream` watermarks agree."""
     def _apply(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
         try:
             batch.count()
-            for sink in sinks:
-                sink(batch, batch_id)
+            run_branches(batch.sparkSession,
+                         [functools.partial(sink, batch, batch_id)
+                          for sink in sinks])
         finally:
             batch.unpersist()
     return _apply
@@ -181,10 +193,9 @@ def drain_changes_direct(spark: SparkSession, table_path: str,
     last = _read_direct_state(spark, state_path)
     if last >= head:
         return last
-    from .cdf_source import (MergeTableChangesDataSource, _manifest,
-                             _changed_buckets)
+    from .cdf_source import _changed_buckets, _manifest
 
-    spark.dataSource.register(MergeTableChangesDataSource)
+    ensure_change_feed_registered(spark)
     man_prev = _manifest(table_path, last) if last > 0 else None
     if last > 0 and man_prev is None:
         raise ValueError(
@@ -260,7 +271,7 @@ def drain_changes(spark: SparkSession, table_path: str,
         head = min(head, int(opts[end_key]))
     else:
         opts["endingCommit"] = str(head)
-    spark.dataSource.register(MergeTableChangesDataSource)
+    ensure_change_feed_registered(spark)
     reader = (spark.readStream.format("merge_table_changes")
               .option("path", table_path)
               .option("includeOld", "true" if include_old else "false"))

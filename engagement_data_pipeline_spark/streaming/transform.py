@@ -198,9 +198,9 @@ def refresh_transform_table(spark: SparkSession, src_path: str,
     # old payloads of updated/deleted keys ride along as `<col>__old`
     # columns, so the window needs no pre-change snapshot read and no
     # semi-join — one Arrow scan serves both sides of the fold
-    from .cdf_source import MergeTableChangesDataSource
+    from .cdf_source import ensure_change_feed_registered
 
-    spark.dataSource.register(MergeTableChangesDataSource)
+    ensure_change_feed_registered(spark)
     ch = (spark.read.format("merge_table_changes")
           .option("path", src_path).option("fromCommit", str(applied))
           .option("toCommit", str(current))

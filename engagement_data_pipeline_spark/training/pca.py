@@ -130,6 +130,9 @@ def gram_stats(emb: DataFrame, dim: int,
     (-1,-1) row count; (i,-1) sum of quantized component i;
     (i,j) for i<=j sum of quantized products. `s` is DECIMAL(38,0)
     rendered as a digit string (cross-engine canonical form).
+    A row whose embedding is NULL has no vector and is left out of
+    every cell, the count included, on both paths: counting it would
+    shift the PCA mean toward zero as if it were a zero vector.
     The unblocked path computes products in int64 under the loud
     `_Q_BOUND` assert (exact — see `_gram_cells_fast`) and sums them
     in DECIMAL(38,0); the tile path computes products in
@@ -146,7 +149,8 @@ def gram_stats(emb: DataFrame, dim: int,
     disjoint across tiles, so the union needs no re-aggregation and
     the result is bit-identical to the unblocked pass — pinned by
     test. Count + first-moment sums ride the first pass."""
-    qdf = emb.select(_quantized(vec_col).alias("__q"))
+    qdf = (emb.where(F.col(vec_col).isNotNull())
+           .select(_quantized(vec_col).alias("__q")))
     if block is None or block >= dim:
         return _gram_cells_fast(qdf, dim)
     idx = F.sequence(F.lit(0), F.lit(dim - 1))

@@ -10,6 +10,7 @@ same per-commit delivery, same retract shape, same final MV state."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -151,12 +152,56 @@ def test_direct_drain_mv_state_equals_stream_drain_mv_state(spark,
     assert state(mv_direct) == [("g1", 1, 20), ("g2", 1, 7)]
 
 
+def test_fan_out_concurrent_sinks_equal_one_at_a_time(spark, tmp_path):
+    """Four MV sinks fanned out over a 5-commit history (inserts, an
+    update moving a row across groups, a delete) end in the same
+    states as the same sinks each drained on its own."""
+    path = str(tmp_path / "t")
+    merge = _merge(spark, path)
+    merge(_num(spark, "a", "g1", 1).unionByName(_num(spark, "b", "g2", 2)),
+          1)
+    merge(_num(spark, "c", "g1", 3), 2)
+    merge(_num(spark, "a", "g2", 10), 3)
+    ing.delete_origins(spark, path,
+                       spark.createDataFrame([("b",)], "origin string"),
+                       strategy="dv")
+    merge(_num(spark, "d", "g3", 5).unionByName(_num(spark, "b", "g1", 7)),
+          5)
+
+    specs = [(["grp"], {"n": ("origin", "count"), "sx": ("x", "sum")}),
+             (["grp"], {"sx": ("x", "sum")}),
+             (["origin"], {"n": ("origin", "count")}),
+             (["grp", "origin"], {"sx": ("x", "sum")})]
+
+    def sinks(tag):
+        return [MV.mv_stream_sink(str(tmp_path / f"{tag}{i}"), g, m)
+                for i, (g, m) in enumerate(specs)]
+
+    assert drain_changes_direct(spark, path, fan_out(*sinks("fan")),
+                                state_path=str(tmp_path / "s_fan")) == 5
+    for i, sink in enumerate(sinks("one")):
+        drain_changes_direct(spark, path, sink,
+                             state_path=str(tmp_path / f"s_one{i}"))
+
+    def st(tag, i):
+        g, m = specs[i]
+        return sorted(tuple(r[c] for c in [*g, *m]) for r in MV.read_mv(
+            spark, str(tmp_path / f"{tag}{i}"), m).collect())
+
+    for i in range(len(specs)):
+        assert st("fan", i) == st("one", i)
+    assert st("fan", 0) == [("g1", 2, 10), ("g2", 1, 10), ("g3", 1, 5)]
+
+
 def test_direct_drain_crash_between_fanout_sinks_converges(spark,
                                                            tmp_path):
-    """Crash AFTER sink 1 applied a commit but BEFORE sink 2 (and
-    before the state write): the rerun replays that commit — sink 1
-    no-ops on its txn watermark, sink 2 applies — and both MVs equal
-    an uninterrupted twin's."""
+    """A sink raising while its sibling is still running: fan_out
+    re-raises only after the sibling has returned (and applied the
+    commit), the batch stays persisted until then, and the rerun
+    replays that commit — sink 1 no-ops on its txn watermark, sink 2
+    applies — so both MVs equal an uninterrupted twin's."""
+    import threading
+
     path = str(tmp_path / "t")
     merge = _merge(spark, path)
     merge(_num(spark, "a", "g1", 1), 1)
@@ -173,14 +218,31 @@ def test_direct_drain_crash_between_fanout_sinks_converges(spark,
     class Boom(RuntimeError):
         pass
 
+    raised = threading.Event()
+    s1_log: list[tuple[int, bool]] = []
+
+    def s1_slow(df, cid):
+        if cid == 2:
+            # still running when the sibling raises (a sequential
+            # fan_out would run this first and time out here)
+            assert raised.wait(30), "sibling sink never ran concurrently"
+            time.sleep(0.5)
+        s1(df, cid)
+        level = df.storageLevel
+        s1_log.append((cid, level.useMemory or level.useDisk))
+
     def s2_flaky(df, cid):
         if cid == 2:
+            raised.set()
             raise Boom()
         s2(df, cid)
 
     with pytest.raises(Boom):
-        drain_changes_direct(spark, path, fan_out(s1, s2_flaky),
+        drain_changes_direct(spark, path, fan_out(s1_slow, s2_flaky),
                              state_path=state)
+    # s1 finished commit 2 (on a still-persisted batch) before the
+    # error reached the caller
+    assert s1_log == [(1, True), (2, True)]
     # resume with the healthy sink composition
     assert drain_changes_direct(spark, path, fan_out(s1, s2),
                                 state_path=state) == 3

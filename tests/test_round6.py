@@ -98,6 +98,18 @@ def test_gram_stats_fast_path_matches_tile_path_in_range(spark):
             for r in gram_stats(df, 4, block=2).collect()}
     assert fast == tile and len(fast) == 4 * 5 // 2 + 4 + 1
 
+    # a NULL embedding is skipped by BOTH paths, count included (the
+    # fast path's concat used to drop it while the tile path counted it)
+    with_null = spark.createDataFrame(
+        [([1.0, 2.0],), (None,), ([0.5, -1.0],)],
+        "embedding array<double>")
+    fast = {(r.i, r.j): r.s for r in gram_stats(with_null, 2).collect()}
+    tile = {(r.i, r.j): r.s
+            for r in gram_stats(with_null, 2, block=1).collect()}
+    assert fast == tile
+    assert fast[(-1, -1)] == "2"
+    assert fast[(0, -1)] == str((1 << 20) + (1 << 19))
+
 
 # --- text index sizing ----------------------------------------------------
 

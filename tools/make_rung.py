@@ -8,11 +8,14 @@ $SPARK_GRAFT_CPUS — point them here).
 
 Replication preserves each table's key arithmetic the way
 tools/scale_stress.py does: replica k shifts synthetic ids by
-k * 10_000_000 (event_id/doc_id/vec_id/order keys), so `% N` derived
+k * shift (event_id/doc_id/vec_id/order keys), so `% N` derived
 structure keeps its distribution, originals survive (fixed lookup
 sets like the ANN QUERY_IDS still resolve), and text replicas get a
 ' rep<k>' suffix so near-dup pair counts grow ~linearly, never
-quadratically. Dimension tables (region, nation, supplier, part,
+quadratically. The shift is 10_000_000, raised by powers of ten
+until it clears every replicated id (`replica_shift`): a fixed shift
+at or below the largest id would map replica ids onto existing ones
+and silently double-count keys. Dimension tables (region, nation, supplier, part,
 customer) are copied as-is — replicating dimensions would break FK
 semantics.
 
@@ -30,7 +33,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SHIFT = 10_000_000
+#: smallest id offset between replicas (see `replica_shift`)
+BASE_SHIFT = 10_000_000
 
 #: copied verbatim (dimensions / FK targets)
 COPY = ["region", "nation", "supplier", "part", "customer"]
@@ -44,12 +48,75 @@ REPLICATE = [
 ]
 
 
+def replica_shift(lo: int, hi: int) -> int:
+    """The id offset between replicas, given the smallest and largest
+    id over every replicated id column: BASE_SHIFT, times ten until it
+    exceeds `hi`, so replica k's ids [k*shift, k*shift + hi] never
+    meet another replica's. One shift for every table keeps the
+    lineitem -> orders key equal in each replica. Negative ids would
+    reach into the previous replica's range and are refused."""
+    if lo < 0:
+        raise ValueError(
+            f"replicated ids must be >= 0 (found {lo}): a shifted "
+            "negative id could equal an id of the previous replica")
+    shift = BASE_SHIFT
+    while hi >= shift:
+        shift *= 10
+    return shift
+
+
+def replicate(spark, src: str, out: str, factor: int) -> int:
+    """Write the x`factor` rung of `src` into `out`; returns the id
+    shift used."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    os.makedirs(out, exist_ok=True)
+    for name in COPY:
+        s = os.path.join(src, f"{name}.parquet")
+        dst = os.path.join(out, f"{name}.parquet")
+        if os.path.isdir(s):
+            shutil.copytree(s, dst, dirs_exist_ok=True)
+        else:
+            shutil.copyfile(s, dst)
+        print(f"copied {name}")
+
+    frames = {name: spark.read.parquet(os.path.join(src, f"{name}.parquet"))
+              for name, _ids, _texts in REPLICATE}
+    bounds = [frames[name].agg(*[f(c) for c in ids
+                                 for f in (F.min, F.max)]).first()
+              for name, ids, _texts in REPLICATE]
+    ids = [v for row in bounds for v in row if v is not None]
+    shift = replica_shift(min(ids, default=0), max(ids, default=0))
+    parts = spark.sparkContext.defaultParallelism
+    for name, id_cols, text_cols in REPLICATE:
+        df = frames[name]
+        reps = []
+        for k in range(factor):
+            r = df
+            for c in id_cols:
+                r = r.withColumn(c, F.col(c) + F.lit(k * shift).cast("long"))
+            if k > 0:
+                for c in text_cols:
+                    r = r.withColumn(
+                        c, F.concat(F.col(c), F.lit(f" rep{k}")))
+            reps.append(r)
+        outdf = reps[0]
+        for r in reps[1:]:
+            outdf = outdf.unionByName(r)
+        (outdf.repartition(parts)
+         .write.mode("overwrite")
+         .parquet(os.path.join(out, f"{name}.parquet")))
+        print(f"replicated {name} x{factor} (id shift {shift})")
+    return shift
+
+
 def main() -> int:
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark-graft-rung10"
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     spark = (SparkSession.builder.master(f"local[{cpus}]")
@@ -62,39 +129,7 @@ def main() -> int:
                      os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(out, exist_ok=True)
-
-    import shutil
-
-    for name in COPY:
-        src = os.path.join(SRC, f"{name}.parquet")
-        dst = os.path.join(out, f"{name}.parquet")
-        if os.path.isdir(src):
-            shutil.copytree(src, dst, dirs_exist_ok=True)
-        else:
-            shutil.copyfile(src, dst)
-        print(f"copied {name}")
-
-    for name, id_cols, text_cols in REPLICATE:
-        df = spark.read.parquet(os.path.join(SRC, f"{name}.parquet"))
-        reps = []
-        for k in range(factor):
-            r = df
-            for c in id_cols:
-                r = r.withColumn(c, F.col(c) + F.lit(k * SHIFT).cast("long"))
-            if k > 0:
-                for c in text_cols:
-                    r = r.withColumn(
-                        c, F.concat(F.col(c), F.lit(f" rep{k}")))
-            reps.append(r)
-        outdf = reps[0]
-        for r in reps[1:]:
-            outdf = outdf.unionByName(r)
-        (outdf.repartition(int(cpus))
-         .write.mode("overwrite")
-         .parquet(os.path.join(out, f"{name}.parquet")))
-        print(f"replicated {name} x{factor}")
-
+    replicate(spark, SRC, out, factor)
     spark.stop()
     print(f"rung ready: {out} (factor {factor} of {SRC})")
     return 0

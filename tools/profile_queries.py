@@ -5,10 +5,12 @@ For each registry query (or a named subset), measures in one process:
     (plan construction, fixture reads/builds, any driver-side loops)
   - exec_s: wall time of the `.count()` action — JVM planning +
     execution of the returned DataFrame
-  - jobs: Spark jobs launched across BOTH phases (status tracker
-    delta) — the per-query fixed-overhead multiplier; at sf0.1 a job
-    costs ~10-40 ms of scheduling alone, so a query firing 30 jobs
-    pays ~1 s before any data is touched.
+  - jobs: Spark jobs launched across BOTH phases, counted under the
+    query's own job group (`profile-<name>`) — the per-query
+    fixed-overhead multiplier; at sf0.1 a job costs ~10-40 ms of
+    scheduling alone, so a query firing 30 jobs pays ~1 s before any
+    data is touched. Jobs a streaming query runs on its own thread
+    carry that stream's group and are not counted.
 
 Run AFTER the fixture cache is warm (bench or a prior profile run):
 fixture builds otherwise land in build_s of whichever query builds
@@ -26,6 +28,35 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+#: the local properties `setJobGroup` sets
+_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description",
+               "spark.job.interruptOnCancel")
+
+
+def profile_one(spark, name: str, fn, sf_dir: str) -> dict:
+    """Build `fn(spark, sf_dir)`, count it, and return its timings and
+    job count. The jobs are counted under a job group of the query's
+    own: a delta of the whole context's job list went negative once
+    `spark.ui.retainedJobs` rolled older jobs out between the two
+    reads. The caller's job group is restored afterwards."""
+    sc = spark.sparkContext
+    group = f"profile-{name}"
+    prev = {k: sc.getLocalProperty(k) for k in _GROUP_KEYS}
+    sc.setJobGroup(group, name)
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.count()
+        t2 = time.perf_counter()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    return {"build_s": round(t1 - t0, 3), "exec_s": round(t2 - t1, 3),
+            "total_s": round(t2 - t0, 3), "jobs": jobs}
 
 
 def main() -> int:
@@ -61,31 +92,17 @@ def main() -> int:
 
     from __spark_entry__ import queries
 
-    tracker = spark.sparkContext.statusTracker()
     rows = {}
     for name, fn in queries().items():
         if name.startswith("family_"):
             continue
         if args and name not in args:
             continue
-        spark.sparkContext.setJobDescription(name)
-        j0 = len(tracker.getJobIdsForGroup(None) or [])
-        t0 = time.perf_counter()
         try:
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.count()
-            t2 = time.perf_counter()
+            rows[name] = profile_one(spark, name, fn, sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"# error {name}: {type(e).__name__}: {e}",
                   file=sys.stderr)
-            continue
-        j1 = len(tracker.getJobIdsForGroup(None) or [])
-        rows[name] = {"build_s": round(t1 - t0, 3),
-                      "exec_s": round(t2 - t1, 3),
-                      "total_s": round(t2 - t0, 3),
-                      "jobs": j1 - j0}
-    spark.sparkContext.setJobDescription(None)
 
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        "PROFILE_LOCAL.json")
